@@ -1073,6 +1073,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             v, n = snapshot_resolve_eq(spark, args.table_path)
             print(json.dumps({"version": v, "rows_resolved": n}))
         elif args.cmd == "snapshot-delete-keys":
+            from .session import local_frame
             from .warehouse.eqdeletes import snapshot_delete_keys
 
             tuples = json.loads(args.keys)
@@ -1085,7 +1086,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 raise SystemExit(
                     "--keys objects must all name the same columns"
                 )
-            dele = spark.createDataFrame(
+            dele = local_frame(
+                spark,
                 [tuple(t[c] for c in cols) for t in tuples], cols
             )
             v, n = snapshot_delete_keys(spark, args.table_path, dele)

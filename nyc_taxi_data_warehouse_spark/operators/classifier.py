@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_frame
+
 DEC = "decimal(28,12)"
 
 
@@ -122,7 +124,8 @@ def train_quality_classifier(
     reg_mask[dim] = 0.0  # never regularize the intercept
     for _ in range(n_iters):
         wdf = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(int(b), float(x)) for b, x in enumerate(w) if x != 0.0]
                 or [(0, 0.0)],
                 "bucket int, w double",

@@ -24,6 +24,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 META_FILE = "_meta.json"
 
 
@@ -116,7 +118,7 @@ def read_index_parquet(
             raise
         if schema is None:
             return None
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def delete_partition_dirs(spark: SparkSession, path: str, dirs: list[str]) -> None:

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _melt(df: DataFrame, columns: list[str]) -> DataFrame:
     """(column, value-as-string) rows; null stays null through the
@@ -60,7 +62,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     )
     # a literal spine keeps one output row per column even over an
     # EMPTY table (the melt yields no rows to group there)
-    spine = df.sparkSession.createDataFrame(
+    spine = local_frame(
+        df.sparkSession,
         [(c, dtypes[c]) for c in columns], "column string, dtype string"
     )
     stats = spine.join(stats, "column", "left").na.fill(

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 # xxhash64 output folded into (0, 1): |h| / 2^63 lands in [0, 1); the
 # +1/+2 shift keeps the endpoints open so ln(u) below is always finite.
 _M = float(1 << 63)
@@ -209,7 +211,7 @@ def mixture_sample(
 
     quota_rows = [(d, int(q)) for d, q in quota_map.items()]
     quotas = F.broadcast(
-        df.sparkSession.createDataFrame(quota_rows, f"{domain_col} string, _quota int")
+        local_frame(df.sparkSession, quota_rows, f"{domain_col} string, _quota int")
     )
     salted = (
         df.join(quotas, domain_col)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..session import local_frame
 
 
 def postings(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -293,7 +294,7 @@ def lookup_postings(
     # engine hash (one tiny job, never a corpus scan).
     buckets = [
         r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
+        for r in local_frame(spark, [(t,) for t in terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(hash_partitions)).alias("b"))
         .distinct()
         .collect()

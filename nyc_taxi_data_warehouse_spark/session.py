@@ -13,15 +13,21 @@ for the 100 TB north star instead:
 - Arrow enabled for the few Pandas-UDF extension operators.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   across driver environments.
+- Every driver-side DataFrame (statement results, metadata lookups,
+  manifests) is built by ``local_frame`` from a ``pyarrow.Table``: it
+  plans as a ``LocalTableScan`` (no Python worker, no job on collect)
+  instead of ``createDataFrame(list)``'s pickled-row RDD.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # Runtime-settable confs, also applied to externally-created sessions
 # (the verification driver hands us its own SparkSession).
@@ -94,6 +100,60 @@ def static_partition_overwrite(spark: SparkSession):
     return scoped_confs(
         spark, {"spark.sql.sources.partitionOverwriteMode": "static"}
     )
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence[Any]],
+    schema: str | StructType | list[str],
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples or lists, by
+    position), built from a ``pyarrow.Table``.
+
+    ``schema`` is a DDL string, a ``StructType``, or a list of column
+    names (types inferred from the rows exactly as
+    ``createDataFrame(rows, names)`` infers them).
+
+    ``createDataFrame(<list>)`` pickles the rows into an RDD whose
+    re-serialisation runs in Python workers on ``defaultParallelism``
+    tasks: ~300 ms of fixed cost per one-row statement result, paid
+    again by every broadcast lookup built from driver metadata. The
+    Arrow-built frame is a ``LocalRelation`` (planned as
+    ``LocalTableScan``): collecting it starts no job, and a join
+    broadcasts it without one. Past
+    ``spark.sql.execution.arrow.localRelationThreshold`` (a 10^6-file
+    relpath lookup) Spark keeps it as Arrow batches parallelised by the
+    JVM — still no Python worker. The Arrow path ignores
+    ``spark.sql.execution.arrow.pyspark.enabled``, so externally created
+    sessions get it too.
+
+    Values go through the schema's own ``toInternal`` first, so they
+    keep ``createDataFrame``'s meaning (a naive ``datetime`` in a
+    TIMESTAMP column is process-local time; pyarrow alone would read it
+    as UTC). One difference: a ``Decimal`` with more fractional digits
+    than its column's scale raises instead of being rounded.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif isinstance(schema, list):
+        schema = spark._inferSchemaFromList(rows, names=schema)
+    width = len(schema.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"row {r!r} has {len(r)} values, schema has {width} fields"
+            )
+    columns = zip(*map(schema.toInternal, rows)) if rows else [()] * width
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def default_parallelism() -> int:

@@ -49,6 +49,7 @@ from ..operators.dedup import (
     minhash_lsh_pairs,
     write_minhash_index,
 )
+from ..session import local_frame
 
 
 def init_dedup_index(
@@ -62,7 +63,7 @@ def init_dedup_index(
 ) -> None:
     """Create an EMPTY minhash index so the first micro-batch has a
     corpus to probe (zero buckets — everything survives step 2)."""
-    empty = spark.createDataFrame([], f"{id_col} long, {text_col} string")
+    empty = local_frame(spark, [], f"{id_col} long, {text_col} string")
     write_minhash_index(
         spark, empty, text_col, id_col, index_path,
         n_hashes=n_hashes, bands=bands, shingle_k=shingle_k,

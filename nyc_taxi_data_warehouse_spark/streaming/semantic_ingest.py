@@ -42,6 +42,7 @@ from ..operators.similarity import (
     embedding_near_dup,
     write_ann_index,
 )
+from ..session import local_frame
 
 
 def init_semantic_index(
@@ -56,7 +57,8 @@ def init_semantic_index(
     """Create an EMPTY ANN index (records the dials) so the first
     micro-batch has a corpus to probe — zero buckets, everything
     survives the corpus gate."""
-    empty = spark.createDataFrame(
+    empty = local_frame(
+        spark,
         [], f"{id_col} long, {vec_col} array<float>"
     )
     write_ann_index(

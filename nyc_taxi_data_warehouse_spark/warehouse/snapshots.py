@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from . import manifestlog
 
 _VDIR = "_versions"
@@ -1572,7 +1573,8 @@ def _read_file_list_flat(
         if row_ids:
             row.append(f)
         lookup_rows.append((*row, *[vals.get(c) for c in partition_cols]))
-    lookup = spark.createDataFrame(
+    lookup = local_frame(
+        spark,
         lookup_rows,
         ", ".join(
             ["_relpath string"]
@@ -1763,7 +1765,7 @@ def _read_file_list(
                 else []
             )
         )
-        return spark.createDataFrame([], out)
+        return local_frame(spark, [], out)
     # Partition values live in the directory names UNDER each commit
     # dir, so each commit is its own basePath: one read per commit
     # (bounded by retained versions, not data size), unioned by name.
@@ -1838,7 +1840,8 @@ def _read_file_list(
     if not want_ids:
         return df  # never touch user columns when no DV machinery ran
     enc2raw = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(_uri_encode_relpath(f), f) for f in files],
             "_dv_enc string, _dv_file string",
         )
@@ -2332,7 +2335,7 @@ def snapshot_changes(
             )
         )
     if not changes:
-        empty = spark.createDataFrame([], out_schema)
+        empty = local_frame(spark, [], out_schema)
         return empty.withColumn(
             "_change_type", F.lit("").cast("string")
         ).withColumn("_commit_version", F.lit(0).cast("int"))
@@ -2483,7 +2486,8 @@ def snapshot_files(
                 else None,
             )
         )
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         rows,
         "file string, rows long, partition_values string, "
         "has_tombstones boolean, has_eq_deletes boolean, stats string",
@@ -2821,10 +2825,10 @@ def read_snapshot_where(
     schema = StructType.fromJson(man["schema"])
     preds = _sanitize_predicates(predicates)
     if not preds:  # provably-empty range / emptied IN list
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     victims, _carried = _victims_by_stats_where(man, preds)
     if not victims:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = _read_file_list(
         spark, path, victims, schema,
         partition_cols=_manifest_partition_cols(man),
@@ -3708,7 +3712,8 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
                 json.dumps(extras, sort_keys=True) if extras else None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, op string, parent int, committed_at_ms long, "
         "n_files int, n_dv_files int, extras string",
@@ -4462,7 +4467,7 @@ def _dv_entry_count(
     if not dv_files:
         return 0
     live = F.broadcast(
-        spark.createDataFrame([(f,) for f in files], "_dv_file string")
+        local_frame(spark, [(f,) for f in files], "_dv_file string")
     )
     return (
         spark.read.parquet(*[f"{_root(root)}/{p}" for p in dv_files])
@@ -5309,7 +5314,7 @@ def read_snapshot_pruned(
             keep.append(f)
     base = read_snapshot(spark, path, version)
     if not keep:
-        return spark.createDataFrame([], base.schema)
+        return local_frame(spark, [], base.schema)
     if len(keep) == len(man["files"]):
         pruned = base
     else:
@@ -6658,7 +6663,8 @@ def snapshot_compact_dvs(
     if not dvs:
         return latest
     live = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(f,) for f in man["files"]], "_dv_file string"
         )
     )
@@ -7274,7 +7280,7 @@ def snapshot_add_column(
             )
         # try_cast: under ANSI mode a malformed literal THROWS at the
         # cast — the probe must turn that into this front door's error
-        probe = spark.createDataFrame([(1,)], "x int").select(
+        probe = local_frame(spark, [(1,)], "x int").select(
             F.lit(default).try_cast(dtype).alias("d")
         )
         normalized = probe.first()["d"]
@@ -7386,7 +7392,7 @@ def snapshot_drop_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:
@@ -7513,7 +7519,7 @@ def snapshot_rename_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:
@@ -7642,7 +7648,7 @@ def snapshot_widen_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:

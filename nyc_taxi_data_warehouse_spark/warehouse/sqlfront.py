@@ -47,6 +47,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .snapshots import _SQL_REGISTRY
 
 __all__ = ["snapshot_sql", "SqlFrontError"]
@@ -896,7 +897,7 @@ def _parse_predicates(p: _Parser) -> dict | list:
 
 
 def _one_row(spark: SparkSession, schema: str, row: tuple) -> DataFrame:
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 # ---------------------------------------------------------- executors
@@ -1033,7 +1034,8 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
         versions = _list_manifests(spark, path)
         if not versions:
             raise FileNotFoundError(f"no snapshot versions at {path}")
-        probe = spark.createDataFrame(
+        probe = local_frame(
+            spark,
             [],
             StructType.fromJson(
                 _load_manifest(spark, path, versions[-1])["schema"]
@@ -1431,9 +1433,7 @@ def _exec_show_branches(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     names = list_branches(spark, path)
-    if not names:
-        return spark.createDataFrame([], "branch string")
-    return spark.createDataFrame([(n,) for n in names], "branch string")
+    return local_frame(spark, [(n,) for n in names], "branch string")
 
 
 def _exec_show_tags(spark, p: _Parser, stmt: str) -> DataFrame:
@@ -1443,11 +1443,7 @@ def _exec_show_tags(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     tags = list_tags(spark, path)
-    if not tags:
-        return spark.createDataFrame([], "tag string, version bigint")
-    return spark.createDataFrame(
-        sorted(tags.items()), "tag string, version bigint"
-    )
+    return local_frame(spark, sorted(tags.items()), "tag string, version bigint")
 
 
 def _exec_alter(spark, p: _Parser, stmt: str) -> DataFrame:
@@ -1743,7 +1739,8 @@ def _exec_insert(spark, p: _Parser, stmt: str, overwrite: bool) -> DataFrame:
             return str(v)
 
         listed = set(want)
-        pre = spark.createDataFrame(
+        pre = local_frame(
+            spark,
             [
                 tuple(_sform(d.get(c)) for c in tcols if c in listed)
                 for d in by_name
@@ -1963,9 +1960,7 @@ def _exec_show_tblproperties(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     props = snapshot_properties(spark, path)
-    return spark.createDataFrame(
-        sorted(props.items()) or [], "key string, value string"
-    )
+    return local_frame(spark, sorted(props.items()), "key string, value string")
 
 
 # ------------------------------------------------------------- dispatch
@@ -2610,7 +2605,7 @@ def _try_select_fastpath(
             )
             for r in rows
         ]
-        out = spark.createDataFrame(data, StructType(fields))
+        out = local_frame(spark, data, StructType(fields))
         return out.limit(limit) if limit is not None else out
     if agg_specs is not None:
         from pyspark.sql.types import StructType
@@ -2637,9 +2632,7 @@ def _try_select_fastpath(
             _agg_out_field(f, raw, alias, dt)
             for f, _c, raw, alias, dt in agg_specs
         ]
-        out = spark.createDataFrame(
-            [tuple(vals)], StructType(fields)
-        )
+        out = local_frame(spark, [tuple(vals)], StructType(fields))
         return out.limit(limit) if limit is not None else out
     if is_count:
         if preds is None:
